@@ -12,6 +12,12 @@ DOMAIN = 0
 SERVER_ID = 1
 TABLE = "db.changes"
 
+# workload sizes (BENCHMARK.json's `why` lines repeat them)
+KEYS = 100_000         # key space of both CDC workloads
+BACKLOG = 160_000      # cdc_catchup: events planted behind the emitter
+WARM_EVENTS = 40_000   # cdc_catchup: the untimed warm round's table
+LIVE_RATE = 2000.0     # cdc_live_tail: events/s of the open-loop generator
+
 # (name, avro type, real_type, length) -- the emitter's in-band schema
 FIELDS = [
     ("domain", "int", "int", -1),

@@ -20,7 +20,8 @@ line each.
   STATS             reply: one JSON object of counters
   QUIT              stop serving
 
-Usage: python3 emitter.py --seed N --mode catchup|live [sizes]; prints
+Usage: python3 emitter.py --seed N --mode catchup|live [--live-seconds S];
+the sizes are cdclog's constants. Prints
 `READY <cdc_port> <control_port>` once the log is planted.
 """
 import argparse
@@ -238,10 +239,6 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--mode", choices=["catchup", "live"], required=True)
-    ap.add_argument("--keys", type=int, default=100_000)
-    ap.add_argument("--backlog", type=int, default=1_000_000)
-    ap.add_argument("--warm", type=int, default=50_000)
-    ap.add_argument("--rate", type=float, default=2000.0)
     ap.add_argument("--live-seconds", type=float, default=10.0,
                     help="length of the live schedule, warm part included")
     a = ap.parse_args()
@@ -249,23 +246,23 @@ def main():
     pool = cdclog.note_pool(a.seed)
     runs = []
     if a.mode == "catchup":
-        keys = cdclog.random_keys(a.seed, 1, a.backlog, a.keys)
+        keys = cdclog.random_keys(a.seed, 1, cdclog.BACKLOG, cdclog.KEYS)
         runs.append(cdclog.generate(a.seed, 1, 1, keys, "update_after"))
     else:
         runs.append(cdclog.generate(a.seed, 0, 1, cdclog.permuted_keys(
-            a.seed, 0, a.keys), "insert"))
-        n_live = int(round(a.rate * a.live_seconds))
-        runs.append(cdclog.generate(a.seed, 2, a.keys + 1, cdclog.random_keys(
-            a.seed, 2, n_live, a.keys), "update_after"))
+            a.seed, 0, cdclog.KEYS), "insert"))
+        n_live = int(round(cdclog.LIVE_RATE * a.live_seconds))
+        runs.append(cdclog.generate(a.seed, 2, cdclog.KEYS + 1, cdclog.random_keys(
+            a.seed, 2, n_live, cdclog.KEYS), "update_after"))
     rendered = [cdclog.render(ev, pool) for ev in runs]
     log = Log(sum(len(d) for d, _ in rendered), sum(len(ev) for ev in runs))
     log.append(rendered[0][0], rendered[0][1], runs[0].seq)
     tables = {cdclog.TABLE: None}
     if a.mode == "catchup":
-        tables[WARM_TABLE] = min(a.warm, a.backlog)
+        tables[WARM_TABLE] = cdclog.WARM_EVENTS
     em = Emitter(log, tables)
     em.first_run_bytes = len(rendered[0][0])
-    em.rate = a.rate
+    em.rate = cdclog.LIVE_RATE
     em.live_run = ((rendered[1][0], rendered[1][1], runs[1].seq)
                    if a.mode == "live" else None)
 

@@ -4,8 +4,9 @@ the side passes) and the emitter's wire counters.
 
 Each metric is measured on the workloads that exercise its layer and is 0
 on the others (LAYERS names them). Totals over a traced window are per
-traced round (cdc_catchup), per traced half-window (cdc_live_tail) or per
-traced pass (query_suite).
+traced round (cdc_catchup), over the traced batches of the timed window
+(cdc_live_tail) or per traced run of the suite (query_suite: each query's
+traced executions, summed over queries, divided by their count per query).
 """
 import numpy as np
 
@@ -81,7 +82,7 @@ def _cdc(m: dict, res: dict, windows: list, batches: list, progress: list,
     new log; `batches`/`progress`: the traced batches' sink records and
     progress reports; `wire_batches`: the data batches the windows' wire
     counters cover (the live tail's cover its whole live window, not just
-    the traced half)."""
+    the traced batches)."""
     n_win = max(1, len(windows))
     side = res.get("side", {})
     em = res["emitter"]
@@ -161,7 +162,8 @@ def per_layer(workload: str, res: dict, builds: list, overhead) -> dict:
         m["gen_late_p99_s"] = res["emitter"].get("gen_late_p99_s", 0.0)
     else:
         execs = [e for e in res["executions"] if e["traced"]]
-        passes = max(1, len({e["pass"] for e in execs}))
+        # traced executions per query: totals are per traced suite pass
+        passes = max(1, len(execs) // max(1, len({e["query"] for e in execs})))
         phases = {k: sum(e.get("phases_ms", {}).get(k, 0) for e in execs) / 1e3 / passes
                   for k in ("analysis", "optimization", "planning")}
         m["SparkEntry.construct_s"] = sum(e["construct_s"] for e in execs) / passes

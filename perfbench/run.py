@@ -45,15 +45,19 @@ DATA_DIR = HERE / "data" / "sf0.01"
 QUERIES_FILE = HERE / "queries.txt"
 WORKLOADS = ("cdc_catchup", "cdc_live_tail", "query_suite")
 
-# sizes recorded in BENCHMARK.json's `why` lines
-KEYS = 100_000
-BACKLOG = 160_000
+FIXTURE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+                  "lineitem", "events", "documents", "embeddings")
+
+# run settings; the data sizes are cdclog's (BENCHMARK.json's `why` lines
+# repeat both)
 MAX_EVENTS_PER_BATCH = 96_000
-WARM_EVENTS = 40_000
-LIVE_WARM_S = 2.0
-LIVE_RATE = 2000.0
+PRELOAD_EVENTS_PER_BATCH = 10_000
+LIVE_WARM_S = 5.0
 MIN_ROUNDS, MAX_ROUNDS = 3, 8
 QUERY_PASSES = 4
+# untimed passes before them: after one, the first timed pass ran a median
+# 35 % slower than the last (JIT still settling); after two, 14 %
+QUERY_WARM_PASSES = 2
 # a live-tail run is invalid when the generator itself ran this late (p99)
 GEN_LATE_LIMIT_S = 0.05
 JVM_HEAP = "4g"
@@ -158,12 +162,9 @@ class Procs:
 def start_emitter(procs: Procs, run_dir: Path, seed: int, mode: str,
                   seconds: float):
     args = [sys.executable, str(HERE / "emitter.py"), "--seed", str(seed),
-            "--mode", mode, "--keys", str(KEYS)]
-    if mode == "catchup":
-        args += ["--backlog", str(BACKLOG), "--warm", str(WARM_EVENTS)]
-    else:
-        args += ["--rate", repr(LIVE_RATE),
-                 "--live-seconds", repr(LIVE_WARM_S + seconds)]
+            "--mode", mode]
+    if mode == "live":
+        args += ["--live-seconds", repr(LIVE_WARM_S + seconds)]
     log = open(run_dir / "emitter.log", "w")
     p = procs.start(args, stdout=subprocess.PIPE, stderr=log, text=True)
     line = p.stdout.readline().split()
@@ -215,19 +216,44 @@ def check_cdc_state(state_file: str, expected: dict, pool: bytes):
     return len(expected), len(bad)
 
 
-def oracle_counts(sqls: dict) -> dict:
+def sql_tables(node) -> set:
+    """Base-table names in a DuckDB `json_serialize_sql` parse tree (CTE
+    references included; callers keep the names they know)."""
+    out = set()
+    if isinstance(node, dict):
+        if node.get("type") == "BASE_TABLE" and "table_name" in node:
+            out.add(node["table_name"])
+        for v in node.values():
+            out |= sql_tables(v)
+    elif isinstance(node, list):
+        for v in node:
+            out |= sql_tables(v)
+    return out
+
+
+def oracle_counts(sqls: dict):
+    """Per query: DuckDB's row count of its oracle SQL over the fixtures,
+    and its input rows, the summed row counts of the fixture tables the
+    oracle SQL names (fixed per query, whatever the engine scans)."""
     import duckdb
     con = duckdb.connect()
     con.execute("PRAGMA threads=%d" % (os.cpu_count() or 1))
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
+    table_rows = {}
+    for t in FIXTURE_TABLES:
         con.execute("CREATE VIEW %s AS SELECT * FROM '%s/%s.parquet'"
                     % (t, DATA_DIR, t))
-    out = {}
+        table_rows[t] = con.execute("SELECT count(*) FROM %s" % t).fetchone()[0]
+    counts, input_rows = {}, {}
     for name, sql in sqls.items():
-        out[name] = con.execute("SELECT count(*) FROM (%s) AS q"
-                                % sql.strip().rstrip(";")).fetchone()[0]
-    return out
+        sql = sql.strip().rstrip(";")
+        counts[name] = con.execute("SELECT count(*) FROM (%s) AS q" % sql).fetchone()[0]
+        tree = json.loads(con.execute("SELECT json_serialize_sql(?::VARCHAR)",
+                                      [sql]).fetchone()[0])
+        names = sql_tables(tree) & table_rows.keys()
+        if tree.get("error") or not names:
+            raise RuntimeError("no fixture table found in the oracle SQL of " + name)
+        input_rows[name] = sum(table_rows[t] for t in names)
+    return counts, input_rows
 
 
 # ------------------------------------------------------------ workloads
@@ -247,8 +273,8 @@ def batch_table(batches, progress):
 
 def cdc_catchup(res: dict, seed: int):
     pool = cdclog.note_pool(seed)
-    ev = cdclog.generate(seed, 1, 1, cdclog.random_keys(seed, 1, BACKLOG, KEYS),
-                         "update_after")
+    ev = cdclog.generate(seed, 1, 1, cdclog.random_keys(
+        seed, 1, cdclog.BACKLOG, cdclog.KEYS), "update_after")
     expected = cdclog.latest_by_key(ev)
     untraced_drains, lat, round_p, batch_s, attempted, failed = [], [], [], [], 0, 0
     drains = {True: [], False: []}
@@ -268,7 +294,7 @@ def cdc_catchup(res: dict, seed: int):
             round_p.append((stats.percentile(lat[-1], 50), stats.percentile(lat[-1], 90)))
             batch_s += [t[2]["duration_ms"]["triggerExecution"] / 1e3 for t in tab]
     lat = np.concatenate(lat) if lat else np.array([])
-    rate = BACKLOG * len(untraced_drains) / sum(untraced_drains)
+    rate = cdclog.BACKLOG * len(untraced_drains) / sum(untraced_drains)
     detail = {
         "cdc_rows_per_s": {"value": rate, "unit": "rows/s", "n": len(untraced_drains)},
         "batch_p50_s": dict(unit="s", **stats.summary(batch_s)),
@@ -287,10 +313,11 @@ def cdc_catchup(res: dict, seed: int):
 def cdc_live_tail(res: dict, seed: int):
     pool = cdclog.note_pool(seed)
     live = res["live"]
-    pre = cdclog.generate(seed, 0, 1, cdclog.permuted_keys(seed, 0, KEYS), "insert")
+    pre = cdclog.generate(seed, 0, 1, cdclog.permuted_keys(seed, 0, cdclog.KEYS),
+                          "insert")
     n = int(live["count"])
-    ev = cdclog.generate(seed, 2, KEYS + 1, cdclog.random_keys(seed, 2, n, KEYS),
-                         "update_after")
+    ev = cdclog.generate(seed, 2, cdclog.KEYS + 1,
+                         cdclog.random_keys(seed, 2, n, cdclog.KEYS), "update_after")
     expected = cdclog.latest_by_key(pre, ev)
     tab = batch_table(live["batches"], live["progress"])
     due = live["t0_ns"] + np.arange(n) * (1e9 / live["rate"])
@@ -305,10 +332,12 @@ def cdc_live_tail(res: dict, seed: int):
     live_tab = [t for t in tab if t[0] >= first_timed]
     last_pub = max(t[1] for t in live_tab) if live_tab else float("nan")
     late = res["emitter"].get("gen_late_p99_s", float("nan"))
-    split = live.get("trace_from_ns")
-    halves = None
-    if split is not None:
-        halves = {True: ok[due >= split], False: ok[due < split]}
+    # batches that started inside the timed window, by tracing state (the
+    # traced run alternates them)
+    window = {True: [], False: []}
+    for t in tab:
+        if t[3]["start_ns"] >= live["timed_from_ns"]:
+            window[t[3]["traced"]].append(t[2]["duration_ms"]["triggerExecution"] / 1e3)
     detail = {
         "freshness_p50_s": {"value": stats.percentile(ok, 50), "unit": "s", "n": len(ok)},
         "freshness_p99_s": {"value": stats.percentile(ok, 99), "unit": "s", "n": len(ok)},
@@ -318,22 +347,27 @@ def cdc_live_tail(res: dict, seed: int):
         "gen_late_p99_s": {"value": late, "unit": "s"},
         "valid": bool(late <= GEN_LATE_LIMIT_S),
         "rate": live["rate"],
+        # every live batch: start (s after the schedule's t0), rows,
+        # triggerExecution (s), traced
+        "live_batches": [[round((t[3]["start_ns"] - live["t0_ns"]) / 1e9, 3),
+                          t[2]["rows"], t[2]["duration_ms"]["triggerExecution"] / 1e3,
+                          t[3]["traced"]] for t in tab if t[0] >= int(ev.seq[0])],
     }
     e2e = {"rows_per_s": (len(ok) / ((last_pub - live["timed_from_ns"]) / 1e9), "rows/s"),
            "latency_p50_s": (stats.percentile(ok, 50), "s"),
            "latency_p90_s": (stats.percentile(ok, 90), "s")}
-    return e2e, detail, attempted, failed, halves
+    return e2e, detail, attempted, failed, window
 
 
 def query_suite(res: dict):
-    counts = oracle_counts(res["oracle_sql"])
+    counts, input_rows = oracle_counts(res["oracle_sql"])
     execs = res["executions"]
     attempted, failed, bad = 0, 0, []
-    for name, w in res["warm"].items():
+    for w in res["warm"]:
         attempted += 1
-        if w["count"] != counts[name]:
+        if w["count"] != counts[w["query"]]:
             failed += 1
-            bad.append(name)
+            bad.append(w["query"])
     for e in execs:
         attempted += 1
         if e["count"] != counts[e["query"]]:
@@ -345,7 +379,7 @@ def query_suite(res: dict):
         if not e["traced"]:
             per_query.setdefault(e["query"], []).append(e["wall_s"])
     medians = {q: float(np.median(v)) for q, v in sorted(per_query.items())}
-    scan = sum(res["warm"][e["query"]]["scan_rows"] for e in execs if not e["traced"])
+    offered = sum(input_rows[e["query"]] for e in execs if not e["traced"])
     detail = {
         "query_suite_s": {"value": sum(medians.values()), "unit": "s",
                           "n": len(medians)},
@@ -353,10 +387,14 @@ def query_suite(res: dict):
         "query_p90_s": {"value": stats.percentile(walls, 90), "unit": "s", "n": len(walls)},
         "query_s": dict(unit="s", **stats.summary(walls)),
         "per_query_median_s": medians,
+        # summed untraced walls per pass, in pass order
+        "pass_s": [sum(e["wall_s"] for e in execs if e["pass"] == p and not e["traced"])
+                   for p in sorted({e["pass"] for e in execs})],
         "mismatched_counts": sorted(set(bad)),
         "persistent_rdds_after_pass": res["persistent_rdds_after_pass"],
+        "input_rows": input_rows,
     }
-    e2e = {"rows_per_s": (scan / sum(walls), "rows/s"),
+    e2e = {"rows_per_s": (offered / sum(walls), "rows/s"),
            "latency_p50_s": (stats.percentile(walls, 50), "s"),
            "latency_p90_s": (stats.percentile(walls, 90), "s")}
     return e2e, detail, attempted, failed
@@ -399,13 +437,15 @@ def main():
             names = [l.split("#")[0].strip() for l in QUERIES_FILE.read_text().splitlines()]
             names = [n for n in names if n]
             job.update(data_dir=str(DATA_DIR), queries=names,
+                       warm_passes=QUERY_WARM_PASSES,
                        orders=query_orders(a.seed, names, QUERY_PASSES))
         else:
             mode = "catchup" if a.workload == "cdc_catchup" else "live"
             _, cdc_port, ctl = start_emitter(procs, run_dir, a.seed, mode, a.seconds)
             job.update(cdc_port=cdc_port, ctl_port=ctl, cdc={
-                "keys": KEYS, "backlog": BACKLOG,
+                "keys": cdclog.KEYS, "backlog": cdclog.BACKLOG,
                 "max_events_per_batch": MAX_EVENTS_PER_BATCH,
+                "preload_events_per_batch": PRELOAD_EVENTS_PER_BATCH,
                 # tailer + replay connections <= cpus
                 "replay_partitions": max(1, cpus - 1),
                 "min_rounds": MIN_ROUNDS, "max_rounds": MAX_ROUNDS,
@@ -425,10 +465,10 @@ def main():
             if drains[True] and drains[False]:
                 overhead = np.median(drains[True]) / np.median(drains[False]) - 1
         elif a.workload == "cdc_live_tail":
-            e2e, detail, attempted, failed, halves = cdc_live_tail(res, a.seed)
+            e2e, detail, attempted, failed, window = cdc_live_tail(res, a.seed)
             valid = detail["valid"]
-            if halves and len(halves[True]) and len(halves[False]):
-                overhead = (np.median(halves[True]) / np.median(halves[False])) - 1
+            if window[True] and window[False]:
+                overhead = np.median(window[True]) / np.median(window[False]) - 1
         else:
             e2e, detail, attempted, failed = query_suite(res)
             if a.trace:

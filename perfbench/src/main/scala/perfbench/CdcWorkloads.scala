@@ -154,14 +154,18 @@ object CdcWorkloads {
 
   /** `cdc_live_tail`: one row per key is preloaded and committed untimed,
     * then the emitter appends at a fixed rate on a wall-clock schedule
-    * while the default-trigger stream publishes into the sink. The traced
-    * run traces only the second half of the schedule, so the two halves'
-    * freshness give the tracing overhead. */
+    * while the default-trigger stream publishes into the sink. In the
+    * traced run the batches of the timed window alternate untraced and
+    * traced (the switch happens after each batch), so traced and untraced
+    * batches of the same window give the tracing overhead. */
   def liveTail(spark: SparkSession, job: JsonNode, tracer: Tracer, out: ObjectNode): Unit =
     withCtx(spark, job, tracer) { c =>
       val keys = c.cdc.get("keys").asLong()
       val dir = Paths.get(c.runDir, "live")
-      val df = c.stream(Table)
+      // the capped batches split the preload into several sink calls that
+      // warm the merge and rewrite path; live batches stay far below the cap
+      val df = c.stream(Table,
+        Map("maxEventsPerBatch" -> c.cdc.get("preload_events_per_batch").asText()))
       val sink = new SinkProbe(dir.resolve("table").toString, c.tracer)
       c.ctl.cmd("QUERY")
       c.ctl.cmd("PHASE preload")
@@ -184,28 +188,26 @@ object CdcWorkloads {
       live.put("count", count.toLong)
       live.put("rate", rate.toDouble)
       live.put("preload_batches", sink.batches.size)
-      val half = if (!tracer.requested) None else Some {
-        val end = t0.toLong + (count.toLong / rate.toDouble * 1e9).toLong
-        val at = timedFrom + (end - timedFrom) / 2
-        live.put("trace_from_ns", at)
-        val th = new Thread(() => {
-          Thread.sleep(math.max(0L, (at - Clock.now()) / 1000000L))
-          tracer.enable(spark)
-        })
-        th.start()
-        th
+      if (tracer.requested) sink.afterBatch = { b =>
+        if (b.endNs >= timedFrom) {
+          if (tracer.on) tracer.disable(spark) else tracer.enable(spark)
+        }
       }
       c.ctl.cmd("WAIT_LIVE")
-      half.foreach(_.join())
       awaitCommitted(q, committed, first.toLong + count.toLong - 1)
       c.ctl.cmd("PHASE idle")
       q.stop()
-      // registered only from the traced half on: totals cover exactly it
-      if (tracer.on) TaskTotals.put(live.putObject("tasks"), tracer.tasks.snapshot(spark))
-      val prog = c.progress.await(q.id, sink.batches.asScala.map(_.id))
-      if (tracer.on) traceBatches(tracer, tracer.nextId(), t0.toLong, Clock.now(),
-        sink, prog.filter(p => sink.batches.asScala.exists(b => b.id == p.batchId && b.traced)))
       tracer.disable(spark)
+      val prog = c.progress.await(q.id, sink.batches.asScala.map(_.id))
+      // the listener was registered only during traced batches: the totals
+      // cover exactly them
+      if (tracer.requested) {
+        TaskTotals.put(live.putObject("tasks"), tracer.tasks.snapshot(spark))
+        tracer.enable(spark)
+        traceBatches(tracer, tracer.nextId(), t0.toLong, Clock.now(), sink,
+          prog.filter(p => sink.batches.asScala.exists(b => b.id == p.batchId && b.traced)))
+        tracer.disable(spark)
+      }
       live.set[JsonNode]("batches", sink.toJson)
       val pa = live.putArray("progress")
       prog.foreach(p => pa.add(ProgressLog.toJson(p)))

@@ -174,13 +174,18 @@ final class SinkProbe(tableDir: String, tracer: Tracer) {
   private val plain = CdcSink.writer(tableDir, "id", Seq("sequence"))
   private val timed = CdcSink.writer(tableDir, "id", Seq("sequence"), swap = timedSwap)
 
+  /** Runs in the stream thread after each batch is published and recorded. */
+  @volatile var afterBatch: Batch => Unit = _ => ()
+
   val fn: (DataFrame, Long) => Unit = { (df, id) =>
     val traced = tracer.on
     val s = Clock.now()
     if (traced) timed(df, id) else plain(df, id)
     val e = Clock.now()
-    batches.add(Batch(id, s, e, if (traced) writeNs.get else 0L,
-      if (traced) publishNs.get else 0L, traced))
+    val b = Batch(id, s, e, if (traced) writeNs.get else 0L,
+      if (traced) publishNs.get else 0L, traced)
+    batches.add(b)
+    afterBatch(b)
   }
 
   def toJson: com.fasterxml.jackson.databind.node.ArrayNode = {

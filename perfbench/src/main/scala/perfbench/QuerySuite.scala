@@ -10,9 +10,11 @@ import graft.SparkEntry
 
 /** `query_suite`: declared queries from `SparkEntry.queries`, each run as
   * `fn(spark, dir).count()` by one closed-loop client, pass after pass in
-  * the per-pass orders the job lists. An untimed warm pass first builds
-  * the IndexStore artifacts (the JVM's `GRAFT_INDEX_DIR` is fresh). In the
-  * traced run the passes alternate untraced and traced. */
+  * the per-pass orders the job lists. Untimed warm passes run first: the
+  * first builds the IndexStore artifacts (the JVM's `GRAFT_INDEX_DIR` is
+  * fresh), the next lets JIT compilation settle. In the
+  * traced run every pass traces half the queries and every query is traced
+  * in half the passes, so traced and untraced executions share the window. */
 object QuerySuite {
   def run(spark: SparkSession, job: JsonNode, tracer: Tracer, out: ObjectNode): Unit = {
     val dir = job.get("data_dir").asText()
@@ -23,28 +25,25 @@ object QuerySuite {
     val oracle = out.putObject("oracle_sql")
     names.foreach(n => oracle.put(n, SparkEntry.oracleSql(n)))
 
-    // warm pass: artifact builds and first-use costs, off the clock; its
-    // task totals give each query's scanned rows (deterministic per query)
-    val warmTasks = new TaskTotals
-    spark.sparkContext.addSparkListener(warmTasks)
-    val warm = out.putObject("warm")
-    names.foreach { n =>
-      val before = warmTasks.snapshot(spark)
+    // warm passes: artifact builds and first-use costs, off the clock
+    val warm = out.putArray("warm")
+    for (_ <- 0 until job.get("warm_passes").asInt(); n <- names) {
       val t0 = System.nanoTime()
       val cnt = fns(n)(spark, dir).count()
-      val o = warm.putObject(n)
+      val o = warm.addObject()
+      o.put("query", n)
       o.put("secs", (System.nanoTime() - t0) / 1e9)
       o.put("count", cnt)
-      o.put("scan_rows", TaskTotals.diff(before, warmTasks.snapshot(spark))("input_rows"))
     }
-    spark.sparkContext.removeSparkListener(warmTasks)
 
     out.put("first_timed_op_ns", Clock.now())
     val execs = out.putArray("executions")
     val pinned = out.putArray("persistent_rdds_after_pass")
     orders.zipWithIndex.foreach { case (order, pass) =>
-      if (pass % 2 == 1) tracer.enable(spark) else tracer.disable(spark)
-      order.foreach(n => execs.add(execute(spark, tracer, n, fns(n), dir, pass)))
+      order.foreach { n =>
+        if ((pass + names.indexOf(n)) % 2 == 1) tracer.enable(spark) else tracer.disable(spark)
+        execs.add(execute(spark, tracer, n, fns(n), dir, pass))
+      }
       pinned.add(spark.sparkContext.getPersistentRDDs.size)
     }
     tracer.disable(spark)

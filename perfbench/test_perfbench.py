@@ -11,6 +11,7 @@ import numpy as np
 
 import cdclog
 import emitter
+import run
 import stats
 
 
@@ -137,6 +138,17 @@ class InclusiveReplay(unittest.TestCase):
         finally:
             em.stopping = True
             srv.close()
+
+
+class OracleInputTables(unittest.TestCase):
+    def test_base_tables_of_the_parse_tree(self):
+        import duckdb
+        sql = ("WITH x AS (SELECT * FROM orders) SELECT * FROM x JOIN lineitem "
+               "ON true WHERE 1 IN (SELECT 1 FROM part)")
+        tree = json.loads(duckdb.connect().execute(
+            "SELECT json_serialize_sql(?::VARCHAR)", [sql]).fetchone()[0])
+        self.assertEqual(run.sql_tables(tree) & set(run.FIXTURE_TABLES),
+                         {"orders", "lineitem", "part"})
 
 
 if __name__ == "__main__":
